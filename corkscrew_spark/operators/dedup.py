@@ -21,8 +21,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from corkscrew_spark.operators.iterate import HOPS_PER_ROUND, materialize
 from corkscrew_spark.operators.text import fingerprint, prefix_key, tokens
-from corkscrew_spark.session import ckpt_observe as _ckpt_observe
 from corkscrew_spark.session import spread as _spread
 
 
@@ -725,9 +725,7 @@ def semdedup_keep(corpus: DataFrame, id_col: str, vec_col: str,
 # ---------------------------------------------------------------------------
 
 def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
-                 max_iter: int = 20, star_after: int = 4,
-                 hops_per_round: int = 2,
-                 ckpt_inner_hop: bool = False) -> DataFrame:
+                 max_iter: int = 20, star_after: int = 4) -> DataFrame:
     """Connected components over near-dup pairs: the step that turns pair
     lists (from any of the strategies above) into the actual dedup
     decision. Returns (doc_id, cluster_id, keep) where cluster_id is the
@@ -736,21 +734,19 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
 
     Two-phase algorithm. Phase 1: iterative min-label propagation
     (label(x) ← min(label(x), min label of neighbors)) —
-    ``hops_per_round`` propagation hops per convergence round, fused
-    into ONE checkpointed job (a hop's output feeds the next hop's
-    neighbor-min join AND merge join; exchange reuse dedupes the double
-    read — measured faster than materializing the inner hop at both 32
-    and 8 cores, see the in-loop comment). The round's convergence flag
-    count rides the checkpoint job as an observed aggregate — one
-    action per round, zero probe actions. The fixpoint check on the
-    round's last hop is sound
-    because it certifies the operator applied to the previous hop's
-    output changed nothing. Hops needed = graph diameter; near-dup
+    ``iterate.HOPS_PER_ROUND`` (2) propagation hops per convergence
+    round, fused into ONE checkpointed job (a hop's output feeds the
+    next hop's neighbor-min join AND merge join; exchange reuse dedupes
+    the double read — measured faster than materializing the inner hop
+    at both 32 and 8 cores). The round's convergence flag count rides
+    the checkpoint job as an observed aggregate — one action per round,
+    zero probe actions. The fixpoint check on the round's last hop is
+    sound because it certifies the operator applied to the previous
+    hop's output changed nothing. Hops needed = graph diameter; near-dup
     clusters are normally shallow (dup sets, not social graphs), so
     this converges in a handful of rounds. Phase 2: if the graph hasn't
-    converged after ``star_after`` rounds
-    (``hops_per_round``·``star_after`` hops), the diameter is
-    adversarially large (templated-spam chains —
+    converged after ``star_after`` rounds (2·``star_after`` hops), the
+    diameter is adversarially large (templated-spam chains —
     exactly when dedup matters most), so the remaining work routes to
     graph.connected_components_star, whose large-star/small-star
     contraction finishes in O(log n) rounds instead of O(diameter).
@@ -773,17 +769,15 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
     # labels₀ stays LAZY (one distinct over the checkpointed edge scan):
     # it is only read inside round 1's plan — twice, like any inner-hop
     # frame, and exchange reuse dedupes that read exactly as it does for
-    # the fused hops (same A/B family as ckpt_inner_hop above). The old
-    # eager checkpoint was one more job + barrier per call.
+    # the fused hops. An eager checkpoint would be one more job +
+    # barrier per call.
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    converged = False
     for _ in range(min(max_iter, star_after)):
-        updated = None
-        for _hop in range(hops_per_round):
+        for _hop in range(HOPS_PER_ROUND):
             neighbor_min = (
                 edges.join(labels, edges["dst"] == labels["node"])
                 .groupBy("src")
@@ -800,30 +794,18 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
                 )
             )
             labels = updated.drop("changed")
-            # ckpt_inner_hop materializes between fused hops (hop h's
-            # output feeds hop h+1 twice — the neighbor-min join and the
-            # merge join). Default OFF: a 3-way interleaved A/B at 32
-            # AND 8 cores (r13) measured exchange reuse catching the
-            # double reference — lazy two-hop won at both core counts
-            # (32c: 3.93 s vs 4.14 s ckpt'd vs 4.44 s one-hop on
-            # dedup_clusters; 8c: 4.06/4.33/4.45) with 3 fewer jobs per
-            # query; the r12 driver flag on this shape was host burst
-            # (the untouched control queries swung identically).
-            if ckpt_inner_hop and _hop < hops_per_round - 1:
-                labels = labels.localCheckpoint(eager=True)
         # `changed` reflects the round's FINAL hop only — zero changes
         # mean the propagation operator is at its fixpoint (labels
         # constant per component = the component minimum), regardless of
         # what earlier hops did. The flag count rides the round's
-        # checkpoint job as an observed aggregate (session.ckpt_observe)
+        # checkpoint job as an observed aggregate (iterate.materialize)
         # instead of a second probe action.
-        ck, m = _ckpt_observe(
+        ck, m = materialize(
             updated, F.count(F.when(F.col("changed"), 1)).alias("nc"))
         labels = ck.drop("changed")
         if m["nc"] == 0:
-            converged = True
             break
-    if not converged:
+    else:
         # Deep-chain fallback: O(log n) star contraction labels every
         # node with its component minimum — same output contract.
         from corkscrew_spark.operators.graph import connected_components_star

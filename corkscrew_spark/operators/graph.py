@@ -23,7 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from corkscrew_spark.session import ckpt_observe
+from corkscrew_spark.operators.iterate import (
+    HOPS_PER_ROUND, materialize, node_set, undirected_edges, unroll)
 
 
 def _prep(edges: DataFrame, directed: bool) -> DataFrame:
@@ -55,7 +56,7 @@ def k_hop(edges: DataFrame, seeds: list[str], max_depth: int = 3,
     visited = seed_df
     frontier = seed_df
     for depth in range(1, max_depth + 1):
-        nxt, m = ckpt_observe(
+        nxt, m = materialize(
             frontier.join(e, frontier["node"] == e["src"])
             .select(e["dst"].alias("node"))
             .distinct()
@@ -64,7 +65,7 @@ def k_hop(edges: DataFrame, seeds: list[str], max_depth: int = 3,
             F.count(F.lit(1)).alias("n"),
         )
         # Emptiness read from the checkpoint's own job — no second
-        # probe action per hop (session.ckpt_observe).
+        # probe action per hop (iterate.materialize).
         if m["n"] == 0:
             break
         visited = visited.unionByName(nxt)
@@ -97,7 +98,7 @@ def shortest_path(edges: DataFrame, src: str, dst: str, max_depth: int = 10,
         # One action per hop: frontier size AND target-hit flag ride the
         # checkpoint job as observed aggregates (previously 3 actions —
         # checkpoint, hit probe, emptiness probe).
-        expanded, m = ckpt_observe(
+        expanded, m = materialize(
             frontier.join(e, frontier["node"] == e["src"])
             .select(
                 e["dst"].alias("node"),
@@ -134,12 +135,7 @@ def topo_levels(edges: DataFrame, max_depth: int = 100) -> DataFrame:
     # |V| observed on the node-set checkpoint's own job: the final
     # unreachable-node check below reduces to a count comparison, so no
     # extra action is ever spent on it.
-    nodes, mn = ckpt_observe(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        F.count(F.lit(1)).alias("n"),
-    )
+    nodes, mn = materialize(node_set(e), F.count(F.lit(1)).alias("n"))
     n_nodes = mn["n"]
     sources = nodes.join(e.select(F.col("dst").alias("node")).distinct(), "node", "left_anti")
     frontier = sources.withColumn("level", F.lit(0)).localCheckpoint(eager=True)
@@ -151,9 +147,9 @@ def topo_levels(edges: DataFrame, max_depth: int = 100) -> DataFrame:
         # Propagate max level forward; a node's level settles once all its
         # predecessors have emitted (max aggregation makes later, larger
         # levels override earlier ones via the final groupBy below).
-        # Emptiness reads off the checkpoint job (session.ckpt_observe) —
+        # Emptiness reads off the checkpoint job (iterate.materialize) —
         # one action per hop instead of two.
-        nxt, m = ckpt_observe(
+        nxt, m = materialize(
             frontier.join(e, frontier["node"] == e["src"])
             .select(e["dst"].alias("node"), (F.col("level") + 1).alias("level"))
             .distinct(),
@@ -174,7 +170,7 @@ def topo_levels(edges: DataFrame, max_depth: int = 100) -> DataFrame:
     # anti-join membership probe (which executed the full aggregation a
     # second time, before the caller's action ran it a third) is exactly
     # the count comparison |result| == |V|.
-    result, mr = ckpt_observe(
+    result, mr = materialize(
         levels.groupBy("node").agg(F.max("level").alias("level")),
         F.count(F.lit(1)).alias("n"),
     )
@@ -200,19 +196,19 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     A seed list gives PERSONALIZED PageRank: teleport (and dangling)
     mass returns only to the seeds, so rank measures proximity to the
     seed set — "which resources sit closest to the changed set", the
-    ranking companion to the blast-radius expansion. Seeds ride along
-    as a 0/1 column; nothing about the plan shape changes.
+    ranking companion to the blast-radius expansion. The list becomes a
+    one-column frame and takes the ``reset_df`` path, so a repeated seed
+    counts once; an empty list raises ValueError.
 
-    ``reset_df`` is the collect-free personalized form: a 1-column
-    DataFrame of seed node ids (deduplicated in-plan; must be
-    non-empty — an empty frame is a caller error and fails in the
-    in-plan 1/count weight, not with a ValueError) joins
-    in as a broadcast instead of a driver round-trip — the seed subtree
-    then schedules INSIDE the ranks-build job, overlapped with the node
-    aggregation, rather than blocking the driver before any graph work
-    starts. The per-seed weight is 1/count(seeds) computed in-plan
-    (IEEE-identical to the literal 1.0/len(seeds) of the list form).
-    Mutually exclusive with ``reset_nodes``.
+    ``reset_df`` is the same seed set as a 1-column DataFrame of node
+    ids (deduplicated in-plan; must be non-empty — an empty frame is a
+    caller error and fails in the in-plan 1/count weight, not with a
+    ValueError). It joins in as a broadcast instead of a driver
+    round-trip — the seed subtree schedules INSIDE the ranks-build job,
+    overlapped with the node aggregation, rather than blocking the
+    driver before any graph work starts. The per-seed weight is
+    1/count(seeds) computed in-plan. Mutually exclusive with
+    ``reset_nodes``.
 
     One Spark job per iteration: the static out-degree is carried in the
     ranks frame (folded into the node set's build aggregation, not
@@ -221,8 +217,16 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     driver collect — the eager localCheckpoint is the only action, and it
     keeps the plan O(1) across iterations like the other graph operators.
 
-    Returns (node, rank) with sum(rank) == 1 up to float error.
+    Returns (node, rank) with sum(rank) == 1 up to float error; an empty
+    edge frame gives an empty result.
     """
+    if reset_nodes is not None:
+        if reset_df is not None:
+            raise ValueError("pass reset_nodes or reset_df, not both")
+        if not reset_nodes:
+            raise ValueError("reset_nodes must be None or non-empty")
+        reset_df = edges.sparkSession.createDataFrame(
+            [(s,) for s in reset_nodes], ["node"])
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
@@ -244,26 +248,22 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         .agg(F.sum("c").alias("cnt"))
         .select("node", F.when(F.col("cnt") > 0, F.col("cnt")).alias("deg"))
     )
-    if reset_nodes is not None and reset_df is not None:
-        raise ValueError("pass reset_nodes or reset_df, not both")
     if reset_df is None:
-        # reset_nodes/classic: the reset column is a cheap literal
-        # projection, so checkpoint the bare (node, deg) frame here. The
-        # reset_df branch instead folds its seed join INTO this same
-        # checkpoint (one materialization carries node+deg+reset —
-        # checkpointing first and joining after would leave the seed
-        # subtree in the early iteration plans, re-running it until the
-        # first in-loop checkpoint; measured slower). |V| rides the
-        # checkpoint job as an observed count — the classic branch no
-        # longer pays a separate count action for it.
-        ranks, _m = ckpt_observe(ranks, F.count(F.lit(1)).alias("n"))
-    if reset_nodes is None and reset_df is None:
-        # |V| is only needed for the uniform reset — the personalized
-        # branches below never read it.
-        n_total = _m["n"]
-        # classic path: keep the exact original expression shape —
-        # (1-d)/N precomputed, dangling/N in-engine — so the unrolled
-        # DuckDB oracle stays bit-compatible (x·(1/N) ≠ x/N in IEEE)
+        # Classic: the reset column is a cheap literal projection, so
+        # checkpoint the bare (node, deg) frame here. The personalized
+        # branch instead folds its seed join INTO this same checkpoint
+        # (one materialization carries node+deg+reset — checkpointing
+        # first and joining after would leave the seed subtree in the
+        # early iteration plans, re-running it until the first in-loop
+        # checkpoint; measured slower). |V| rides the checkpoint job as
+        # an observed count, not a separate count action.
+        ranks, m = materialize(ranks, F.count(F.lit(1)).alias("n"))
+        n_total = m["n"]
+        if n_total == 0:
+            return ranks.select("node", F.lit(0.0).alias("rank"))
+        # keep the exact original expression shape — (1-d)/N
+        # precomputed, dangling/N in-engine — so the unrolled DuckDB
+        # oracle stays bit-compatible (x·(1/N) ≠ x/N in IEEE)
         ranks = ranks.withColumn("rank", F.lit(1.0 / n_total))
         new_rank = (
             F.lit((1.0 - damping) / n_total)
@@ -273,52 +273,36 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         )
         carry = ["node", "deg"]
     else:
-        if reset_df is not None:
-            # Collect-free personalized reset: broadcast-join the seed
-            # frame and weight each seed 1/count(seeds) computed in-plan
-            # (1.0 / BIGINT is the same IEEE double division the literal
-            # form performs on len(reset_nodes)). The seed subtree now
-            # schedules inside the ranks job instead of blocking the
-            # driver on a collect before any graph work starts.
-            # Seeds are deduplicated in-plan (free for a broadcast-sized
-            # frame): duplicate seed rows would otherwise fan the ranks
-            # join out to duplicate (node, rank) rows AND skew the
-            # per-seed weight. An EMPTY seed frame is a caller error
-            # like reset_nodes=[] — it surfaces as a null/failed
-            # division in the reset weight rather than a ValueError
-            # (the count lives in-plan, unknowable at build time).
-            if len(reset_df.columns) != 1:
-                raise ValueError(
-                    "reset_df must have exactly one column of seed node "
-                    f"ids, got {reset_df.columns!r}")
-            seed_col = reset_df.columns[0]
-            distinct_seeds = reset_df.select(
-                F.col(seed_col).alias("node")).distinct()
-            seeds = distinct_seeds.withColumn("__is_seed", F.lit(True))
-            seed_w = distinct_seeds.agg(
-                (F.lit(1.0) / F.count(F.lit(1))).alias("__seed_w"))
-            ranks = (
-                ranks.join(F.broadcast(seeds), "node", "left")
-                .crossJoin(F.broadcast(seed_w))
-                .withColumn(
-                    "reset",
-                    F.when(F.col("__is_seed"), F.col("__seed_w"))
-                    .otherwise(0.0),
-                )
-                .drop("__is_seed", "__seed_w")
-                .withColumn("rank", F.col("reset"))
-                .localCheckpoint(eager=True)
+        # Collect-free personalized reset: broadcast-join the seed frame
+        # and weight each seed 1/count(seeds) computed in-plan. Seeds are
+        # deduplicated in-plan (free for a broadcast-sized frame):
+        # duplicate seed rows would otherwise fan the ranks join out to
+        # duplicate (node, rank) rows AND skew the per-seed weight. An
+        # EMPTY seed frame surfaces as a null/failed division in the
+        # reset weight rather than a ValueError (the count lives
+        # in-plan, unknowable at build time).
+        if len(reset_df.columns) != 1:
+            raise ValueError(
+                "reset_df must have exactly one column of seed node "
+                f"ids, got {reset_df.columns!r}")
+        seed_col = reset_df.columns[0]
+        distinct_seeds = reset_df.select(
+            F.col(seed_col).alias("node")).distinct()
+        seeds = distinct_seeds.withColumn("__is_seed", F.lit(True))
+        seed_w = distinct_seeds.agg(
+            (F.lit(1.0) / F.count(F.lit(1))).alias("__seed_w"))
+        ranks = (
+            ranks.join(F.broadcast(seeds), "node", "left")
+            .crossJoin(F.broadcast(seed_w))
+            .withColumn(
+                "reset",
+                F.when(F.col("__is_seed"), F.col("__seed_w"))
+                .otherwise(0.0),
             )
-        else:
-            if not reset_nodes:
-                raise ValueError("reset_nodes must be None or non-empty")
-            seed_arr = F.array(*[F.lit(s) for s in reset_nodes])
-            reset = F.when(F.array_contains(seed_arr, F.col("node")),
-                           F.lit(1.0 / len(reset_nodes))).otherwise(0.0)
-            ranks = (
-                ranks.withColumn("reset", reset)
-                .withColumn("rank", F.col("reset"))
-            )
+            .drop("__is_seed", "__seed_w")
+            .withColumn("rank", F.col("reset"))
+            .localCheckpoint(eager=True)
+        )
         new_rank = (
             F.lit(1.0 - damping) * F.col("reset")
             + F.lit(damping)
@@ -326,7 +310,8 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                + F.col("dangling") * F.col("reset"))
         )
         carry = ["node", "deg", "reset"]
-    for it in range(iters):
+
+    def step(ranks: DataFrame) -> DataFrame:
         # Sinks (deg null) have no out-edges, so the inner join drops them
         # from the contribution shuffle naturally.
         contrib = (
@@ -338,20 +323,14 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
             ranks.filter(F.col("deg").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
         )
-        ranks = (
+        return (
             ranks.drop("rank")
             .join(contrib, ranks["node"] == contrib["dst"], "left")
             .crossJoin(F.broadcast(dangling))
             .select(*carry, new_rank.alias("rank"))
         )
-        # Checkpoint every 2nd iteration, except the last: the caller's
-        # one action materializes the final 1-2 iterations itself, so a
-        # trailing eager checkpoint would pay one extra job + a second
-        # materialization of the final frame (measured ~0.1-0.3 s/query;
-        # lineage stays bounded at two iterations either way).
-        if it % 2 == 1 and it != iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", "rank")
+
+    return unroll(step, ranks, iters).select("node", "rank")
 
 
 def triangle_count(edges: DataFrame, src_col: str = "src",
@@ -375,12 +354,8 @@ def triangle_count(edges: DataFrame, src_col: str = "src",
     # closing set IS `und` — recomputing it as ordered ∪ reversed +
     # distinct would pay a third dedup shuffle for an identical relation)
     und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-        )
-        .distinct()
+        undirected_edges(edges, src_col, dst_col)
+        .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .localCheckpoint(eager=True)
     )
     deg = und.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg"))
@@ -425,8 +400,7 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
                             src_col: str = "src", dst_col: str = "dst",
                             weight_col: str = "weight",
                             max_rounds: int = 30,
-                            directed: bool = True,
-                            hops_per_round: int = 2) -> DataFrame:
+                            directed: bool = True) -> DataFrame:
     """Single-source shortest path distances under non-negative edge
     weights — Bellman-Ford by synchronous rounds as DataFrame joins
     (the SSSP every Pregel-style system ships; Dijkstra's priority queue
@@ -434,16 +408,17 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
 
     Per round: tentative distances join out-edges (one shuffle on the
     edge key), candidate = dist + weight, new dist = min(old, best
-    candidate). ``hops_per_round`` chains that relaxation h times INSIDE
-    one round (each step min-merged per node before the next expansion,
-    so candidate volume stays <= |V| between steps): the iteration count
-    — and with it the number of synchronization barriers and driver
-    round-trips, the real cost of Pregel loops on a cluster — drops to
-    ceil(diameter / h) for the same total edge-join work. Rounds stop
-    early at fixpoint; localCheckpoint after every round keeps the plan
-    O(1). Negative weights raise (Bellman-Ford would need |V|-1 forced
-    rounds and a negative-cycle check — out of scope for path costs,
-    which are non-negative).
+    candidate). Each round chains that relaxation
+    ``iterate.HOPS_PER_ROUND`` (2) times (each step min-merged per node
+    before the next expansion, so candidate volume stays <= |V| between
+    steps): the iteration count — and with it the number of
+    synchronization barriers and driver round-trips, the real cost of
+    Pregel loops on a cluster — drops to ceil(diameter / 2) for the same
+    total edge-join work. Rounds stop early at fixpoint; localCheckpoint
+    after every round keeps the plan O(1); not converging within
+    ``max_rounds`` raises ValueError. Negative weights raise
+    (Bellman-Ford would need |V|-1 forced rounds and a negative-cycle
+    check — out of scope for path costs, which are non-negative).
 
     Returns (node, dist DOUBLE, hops BIGINT) for every reachable node;
     ``hops`` is the hop count of the minimal-cost path (min-dist ties
@@ -462,7 +437,7 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
     # aggregate instead of a dedicated full-scan action: any negative
     # input weight survives the per-(src,dst) min, so min(w) < 0 on the
     # grouped relation ⟺ some input weight < 0.
-    e, _mw = ckpt_observe(
+    e, _mw = materialize(
         e.groupBy("src", "dst").agg(F.min("w").alias("w"))  # parallel edges
         # No repartition before the checkpoint (see pagerank: the
         # partitioning metadata does not survive localCheckpoint, so the
@@ -476,8 +451,6 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
     dists = spark.createDataFrame(
         [(source, 0.0, 0)], "node string, dist double, hops long"
     ).localCheckpoint(eager=True)
-    if hops_per_round < 1:
-        raise ValueError("hops_per_round must be >= 1")
 
     def _min_merge(df: DataFrame) -> DataFrame:
         return (
@@ -489,7 +462,7 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
 
     for _ in range(max_rounds):
         acc = dists
-        for _h in range(hops_per_round):
+        for _h in range(HOPS_PER_ROUND):
             cand = (
                 acc.join(e, acc["node"] == e["src"])
                 .select(
@@ -509,7 +482,7 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
         # instead of two.
         prev = dists.select("node", "dist", "hops").withColumn(
             "__old", F.lit(1))
-        merged, m = ckpt_observe(
+        merged, m = materialize(
             acc.join(prev, ["node", "dist", "hops"], "left"),
             F.count(F.when(F.col("__old").isNull(), 1)).alias("changed"),
         )
@@ -548,15 +521,11 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
     component minima.
 
     Returns (node, component) for every node incident to an input edge
-    (self-loop-only nodes map to themselves).
+    (self-loop-only nodes map to themselves). Not converging within
+    ``max_rounds`` raises ValueError.
     """
-    nodes = (
-        edges.select(F.col(src_col).alias("node"))
-        .unionByName(edges.select(F.col(dst_col).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cur, _mc = ckpt_observe(
+    nodes = node_set(edges, src_col, dst_col).localCheckpoint(eager=True)
+    cur, _mc = materialize(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
@@ -594,8 +563,8 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
         # checkpoint job; the anti-join probe only runs at all on rounds
         # where the count held still (normally just the final round) —
         # 3 actions per round down to ~1.
-        nxt, m = ckpt_observe(star(star(cur, large=True), large=False),
-                              F.count(F.lit(1)).alias("n"))
+        nxt, m = materialize(star(star(cur, large=True), large=False),
+                             F.count(F.lit(1)).alias("n"))
         stable = (
             m["n"] == cur_n
             and cur.join(nxt, ["a", "b"], "left_anti").isEmpty()
@@ -651,12 +620,7 @@ class Graph:
         )
 
     def vertices(self) -> DataFrame:
-        e = self._e()
-        return (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
+        return node_set(self._e())
 
     def degrees(self) -> DataFrame:
         e = self._e()
@@ -784,7 +748,9 @@ def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
 
     Returns (node, hub, authority), both scores L2-normalized.
     """
-    e, _me = ckpt_observe(
+    if iters < 1:
+        raise ValueError("iters must be >= 1")
+    e, _me = materialize(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct(),
@@ -792,34 +758,31 @@ def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     )
     # |E| observed on the edge checkpoint's own job (no separate count).
     n_edges = max(_me["n"], 1)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    nodes = node_set(e).localCheckpoint(eager=True)
     # The loop keeps SPARSE frames: a node missing from `hubs`/`auth`
     # has score 0 and contributes nothing to the next sums, so the full
     # node set only re-attaches once at the end — two fewer shuffles per
     # iteration than materializing dense score frames each round.
-    hubs = nodes.select("node", F.lit(1.0).alias("hub"))
     auth = None
-    for it in range(iters):
+
+    def step(hubs: DataFrame) -> DataFrame:
+        # The scores below need the LAST round's authority frame too; it
+        # is a lazy subtree of that round's hubs, so keeping it costs
+        # nothing extra.
+        nonlocal auth
         auth = (
             e.join(hubs.select(F.col("node").alias("src"), "hub"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg((F.sum("hub") / F.lit(float(n_edges))).alias("authority"))
         )
-        hubs = (
+        return (
             e.join(auth.select(F.col("node").alias("dst"), "authority"),
                    "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("authority").alias("hub"))
         )
-        # Checkpoint every 2nd iteration, except the last (see pagerank:
-        # the caller's action materializes the tail iterations itself).
-        if it % 2 == 1 and it != iters - 1:
-            hubs = hubs.localCheckpoint(eager=True)
+
+    hubs = unroll(step, nodes.select("node", F.lit(1.0).alias("hub")), iters)
     scores = (
         nodes.join(hubs, "node", "left")
         .join(auth, "node", "left")
@@ -868,26 +831,19 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
 
     Returns (node, community).
     """
-    und = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .distinct()
-        # No repartition before the checkpoint (see pagerank: the
-        # partitioning metadata does not survive localCheckpoint, so the
-        # extra edge shuffle buys nothing downstream — measured 0.79×
-        # on graph_communities with it removed).
-        .localCheckpoint(eager=True)
-    )
+    # No repartition before the checkpoint (see pagerank: the
+    # partitioning metadata does not survive localCheckpoint, so the
+    # extra edge shuffle buys nothing downstream — measured 0.79× on
+    # graph_communities with it removed).
+    und = undirected_edges(edges, src_col, dst_col).localCheckpoint(eager=True)
     labels = (
         und.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("community"))
         .localCheckpoint(eager=True)
     )
-    for it in range(iters):
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_votes = (
             und.join(labels.select(F.col("node").alias("src"), "community"), "src")
             .select(F.col("dst").alias("node"), "community")
@@ -906,17 +862,14 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
         # sf1), exact-equal outputs everywhere.
         counts = (votes.repartition("node")
                   .groupBy("node", "community").agg(F.count("*").alias("cnt")))
-        new_labels = counts.groupBy("node").agg(
+        return counts.groupBy("node").agg(
             F.min_by(
                 "community",
                 F.struct((-F.col("cnt")).alias("nc"), F.col("community")),
             ).alias("community")
         )
-        labels = new_labels
-        # Every 2nd round, except the last (see pagerank).
-        if it % 2 == 1 and it != iters - 1:
-            labels = labels.localCheckpoint(eager=True)
-    return labels
+
+    return unroll(step, labels, iters)
 
 
 def shortest_path_bidirectional(edges: DataFrame, src: str, dst: str,
@@ -970,44 +923,38 @@ def shortest_path_bidirectional(edges: DataFrame, src: str, dst: str,
             F.col("path").isNotNull()
         ).select(F.lit(total_depth).alias("depth"), "path")
 
+    def _expand(frontier, e, visited, other, forward):
+        """Next layer of one side, with its size and whether it touches
+        the OTHER side's frontier (a left-join marker — the node
+        intersection a separate _meet probe would test) observed on the
+        same checkpoint job: one action per round. The full meet (path
+        assembly + lex-min) only runs once, on the meeting round."""
+        hop = F.array(e["dst"])
+        path = (F.concat(F.col("path"), hop) if forward
+                else F.concat(hop, F.col("path")))
+        out, m = materialize(
+            frontier.join(e, frontier["node"] == e["src"])
+            .select(e["dst"].alias("node"), path.alias("path"))
+            .join(visited, "node", "left_anti")
+            .groupBy("node").agg(F.min("path").alias("path"))
+            .join(other.select("node").withColumn("__m", F.lit(1)),
+                  "node", "left"),
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.col("__m")).alias("met"),
+        )
+        return out.drop("__m"), m
+
     for total in range(1, max_depth + 1):
-        # One action per round: the expanded side's checkpoint job also
-        # reports its size and whether it touches the OTHER side's
-        # frontier (a left-join marker — the same node intersection the
-        # _meet probe tested as a separate action). The full meet (path
-        # assembly + lex-min) only runs once, on the meeting round.
         if f_size <= b_size:
-            f_frontier, m = ckpt_observe(
-                f_frontier.join(ef, f_frontier["node"] == ef["src"])
-                .select(ef["dst"].alias("node"),
-                        F.concat(F.col("path"), F.array(ef["dst"]))
-                        .alias("path"))
-                .join(f_visited, "node", "left_anti")
-                .groupBy("node").agg(F.min("path").alias("path"))
-                .join(b_frontier.select("node").withColumn(
-                    "__m", F.lit(1)), "node", "left"),
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.col("__m")).alias("met"),
-            )
-            f_frontier = f_frontier.drop("__m")
+            f_frontier, m = _expand(f_frontier, ef, f_visited, b_frontier,
+                                    forward=True)
             f_size = m["n"]
             if f_size == 0:
                 break
             f_visited = f_visited.unionByName(f_frontier.select("node"))
         else:
-            b_frontier, m = ckpt_observe(
-                b_frontier.join(eb, b_frontier["node"] == eb["src"])
-                .select(eb["dst"].alias("node"),
-                        F.concat(F.array(eb["dst"]), F.col("path"))
-                        .alias("path"))
-                .join(b_visited, "node", "left_anti")
-                .groupBy("node").agg(F.min("path").alias("path"))
-                .join(f_frontier.select("node").withColumn(
-                    "__m", F.lit(1)), "node", "left"),
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.col("__m")).alias("met"),
-            )
-            b_frontier = b_frontier.drop("__m")
+            b_frontier, m = _expand(b_frontier, eb, b_visited, f_frontier,
+                                    forward=False)
             b_size = m["n"]
             if b_size == 0:
                 break
@@ -1030,36 +977,29 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
     needed equals the peeling depth (bounded by graph degeneracy, small
     for real resource graphs). Checkpoint per round keeps the plan
     O(1). Returns (node, degree) of the surviving subgraph; empty when
-    the graph has no k-core.
+    the graph has no k-core. Not converging within ``max_iter`` rounds
+    raises ValueError.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    cur = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    cur = undirected_edges(edges, src_col, dst_col).localCheckpoint(eager=True)
     for _ in range(max_iter):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))
         # Emptiness of both the peel set and the surviving edge set reads
-        # off their checkpoint jobs (session.ckpt_observe) — 4 actions
+        # off their checkpoint jobs (iterate.materialize) — 4 actions
         # per peeling round down to 2.
-        low, ml = ckpt_observe(deg.filter(F.col("degree") < k).select("src"),
-                               F.count(F.lit(1)).alias("n"))
+        low, ml = materialize(deg.filter(F.col("degree") < k).select("src"),
+                              F.count(F.lit(1)).alias("n"))
         if ml["n"] == 0:
             return deg.select(F.col("src").alias("node"), "degree")
-        cur, mc = ckpt_observe(
+        cur, mc = materialize(
             cur.join(low, "src", "left_anti")
             .join(low.select(F.col("src").alias("dst")), "dst", "left_anti"),
             F.count(F.lit(1)).alias("n"),
         )
         if mc["n"] == 0:
             return cur.sparkSession.createDataFrame([], "node string, degree long")
-    raise RuntimeError(f"k_core did not converge within {max_iter} rounds")
+    raise ValueError(f"k_core did not converge within {max_iter} rounds")
 
 
 def find_motifs(edges: DataFrame, pattern: str, src_col: str = "src",

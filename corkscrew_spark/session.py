@@ -69,44 +69,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def ckpt_observe(df, *metrics, timeout: float = 120.0):
-    """Eager ``localCheckpoint`` that also returns observed aggregates
-    computed by the SAME materialization job.
-
-    Every iterative operator here pays one action per round to
-    materialize the round's frame and previously paid a SECOND action
-    (``isEmpty``/``count``/anti-join probe) to read its convergence
-    condition. The probe is an aggregate over exactly the rows the
-    checkpoint job already streams, so attaching it as an ``Observation``
-    makes the materialization report it for free — one action per round
-    instead of two (guide §1.4: aggregate what is already flowing;
-    §2.6: rounds × barrier/driver-round-trip latency is the real cost of
-    Pregel-style loops, and this halves it).
-
-    Returns ``(checkpointed_df, metrics_dict)``. The observe node does
-    not survive into the checkpointed plan (it scans as ExistingRDD).
-    Robustness: if the metric event is ever lost under listener
-    pressure, the aggregates are re-derived with one cheap job over the
-    already-materialized RDD — convergence never depends on event
-    delivery.
-    """
-    import time
-
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.observe(obs, *metrics).localCheckpoint(eager=True)
-    deadline = time.monotonic() + timeout
-    jo = obs._jo
-    while time.monotonic() < deadline:
-        if jo.getRowOrEmpty().isDefined():
-            return out, obs.get
-        time.sleep(0.002)
-    # Fallback (never observed in practice): recompute over the
-    # materialized scan — same values, one extra small job.
-    return out, out.agg(*metrics).first().asDict()
-
-
 def spread(df, key):
     """Scale-adaptive parallelism floor for shuffle-free map-heavy chains.
 

@@ -615,18 +615,41 @@ class TestPersonalizedPagerank:
         with _pytest.raises(ValueError):
             pagerank(e, reset_nodes=["a"], reset_df=seeds_df)
 
+    def test_duplicate_seeds_keep_mass(self, spark):
+        """A repeated seed counts once: the list goes through the same
+        deduplicating seed frame as reset_df (it used to weight each
+        list entry 1/len, so ["a", "a", "d"] summed to 2/3)."""
+        from corkscrew_spark.operators.graph import pagerank
+
+        pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
+                 ("d", "e"), ("e", "c"), ("b", "e")]
+        e = spark.createDataFrame(pairs, "src string, dst string")
+        dup = sorted(map(tuple, pagerank(
+            e, iters=10, reset_nodes=["a", "a", "d"]).collect()))
+        once = sorted(map(tuple, pagerank(
+            e, iters=10, reset_nodes=["a", "d"]).collect()))
+        assert abs(sum(r for _, r in dup) - 1.0) < 1e-9
+        assert dup == once
+
+    def test_empty_edges_give_empty_ranks(self, spark):
+        from corkscrew_spark.operators.graph import pagerank
+
+        e = spark.createDataFrame([], "src string, dst string")
+        out = pagerank(e)
+        assert out.columns == ["node", "rank"] and out.collect() == []
+
 
 def test_ckpt_observe_metrics_and_plan(spark):
-    """session.ckpt_observe: the fused convergence probe must report the
+    """iterate.materialize: the fused convergence probe must report the
     exact aggregates of the materialized rows (including the empty
     case) and leave a clean checkpointed plan (no lingering observe
     node — downstream consumers scan the materialized RDD)."""
     from pyspark.sql import functions as F
 
-    from corkscrew_spark.session import ckpt_observe
+    from corkscrew_spark.operators.iterate import materialize
 
     df = spark.range(100).withColumn("changed", F.col("id") % 10 == 0)
-    ck, m = ckpt_observe(
+    ck, m = materialize(
         df,
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("changed"), 1)).alias("nc"),
@@ -635,6 +658,29 @@ def test_ckpt_observe_metrics_and_plan(spark):
     assert ck.count() == 100 and ck.columns == ["id", "changed"]
     assert "Scan ExistingRDD" in ck._jdf.queryExecution().executedPlan().toString()
 
-    empty, me = ckpt_observe(spark.range(5).filter("id < 0"),
-                             F.count(F.lit(1)).alias("n"))
+    empty, me = materialize(spark.range(5).filter("id < 0"),
+                            F.count(F.lit(1)).alias("n"))
     assert me["n"] == 0 and empty.count() == 0
+
+
+class TestRoundCaps:
+    """A convergence loop that hits its round cap raises ValueError."""
+
+    def test_weighted_sssp(self, spark):
+        e = spark.createDataFrame([(str(i), str(i + 1), 1.0) for i in range(6)],
+                                  "src string, dst string, weight double")
+        with pytest.raises(ValueError, match="did not converge"):
+            graph.weighted_shortest_paths(e, "0", max_rounds=1)
+
+    def test_connected_components_star(self, spark):
+        e = _edges(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(10)])
+        with pytest.raises(ValueError, match="did not converge"):
+            graph.connected_components_star(e, max_rounds=1)
+
+    def test_k_core(self, spark):
+        # peeling the tail t3 -> t1 leaves d at degree 3 only in round 2
+        e = _edges(spark, [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"),
+                           ("b", "d"), ("c", "d"), ("d", "t1"),
+                           ("t1", "t2"), ("t2", "t3")])
+        with pytest.raises(ValueError, match="did not converge"):
+            graph.k_core(e, 3, max_iter=1)
